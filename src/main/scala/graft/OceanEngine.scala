@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.cache.ResultCache
-import graft.core.Grid
+import graft.core.{Grid, LocalFrames}
 import graft.ops.{Clean, Describe, Quality}
 import graft.sources.{ErddapSource, ErddapUrl}
 
@@ -17,6 +17,17 @@ import graft.sources.{ErddapSource, ErddapUrl}
   * validate (P8) → snap to grid → cache probe (S9) → fetch (S1/S2) →
   * parse (S3) → clean (P1/F1–F3/P2/O1) → quality report (A8) → cache
   * store (S8).
+  *
+  * The single-point fetch is driver-resident: the point's frame is
+  * collected once (the cleaned rows on a miss, the cached rows on a
+  * hit) and handed back as a local frame over those rows, which the
+  * quality report, the cache store, [[summary]] and the caller's
+  * `collect` all read without re-running parse → clean → sort. The
+  * driver already holds that data: a miss's rows come from the response
+  * body [[ErddapSource.fetchRaw]] returns as a `String` (≤72 monthly
+  * rows), a hit's from a cache entry capped at
+  * [[ResultCache.MaxEntryBytes]]. Many points at once go through
+  * [[fetchManyObservations]], the distributed path.
   */
 final class OceanEngine(
     spark: SparkSession,
@@ -31,6 +42,7 @@ final class OceanEngine(
       fromCache: Boolean)
 
   /** Fetch one grid point's time series, cleaned and quality-scored.
+    * `data` is a driver-local frame in time order (see the class doc).
     * Throws IllegalArgumentException on out-of-bounds coords/dates
     * (the reference's fail-fast contract). */
   def fetchObservations(lat: Double, lon: Double,
@@ -46,10 +58,12 @@ final class OceanEngine(
       else None
     cached match {
       case Some(df) =>
-        FetchResult(df, Quality.report(df), sLat, sLon, fromCache = true)
+        val rows = LocalFrames.materialize(df)
+        FetchResult(rows, Quality.report(rows), sLat, sLon, fromCache = true)
       case None =>
         val (body, _) = source.fetchRaw(lat, lon, startDate, endDate, variables)
-        val cleaned = Clean.cleanApiResponse(source.toRawDataFrame(spark, body))
+        val cleaned = LocalFrames.materialize(
+          Clean.cleanApiResponse(source.toRawDataFrame(spark, body)))
         val report = Quality.report(cleaned)
         if (useCache && report.qualityScore > 0.0)
           cache.foreach(_.put(sLat, sLon, startDate, endDate, variables, cleaned))

@@ -2703,16 +2703,17 @@ object SparkEntry {
 
     // The clean-stage SQL mirrors Clean.cleanApiResponse step for step:
     // units-row strip BEFORE casts, normalize names (DuckDB trims the
-    // ' Latitude ' header itself), TRY_CAST coercions, how='all' dropna
-    // on the key vars, nulls-last time sort.
+    // ' Latitude ' header itself), TRY_CAST coercions with NaN read as
+    // missing (DuckDB's NaN equals itself, so NULLIF maps it to NULL),
+    // how='all' dropna on the key vars, nulls-last time sort.
     "q28_clean_pipeline" ->
       s"""WITH typed AS (
         |  SELECT TRY_CAST(time AS TIMESTAMP) AS time,
-        |    TRY_CAST(depth AS DOUBLE) AS depth,
-        |    TRY_CAST("Latitude" AS DOUBLE) AS latitude,
-        |    TRY_CAST(longitude AS DOUBLE) AS longitude,
-        |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
-        |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
+        |    NULLIF(TRY_CAST(depth AS DOUBLE), 'NaN'::DOUBLE) AS depth,
+        |    NULLIF(TRY_CAST("Latitude" AS DOUBLE), 'NaN'::DOUBLE) AS latitude,
+        |    NULLIF(TRY_CAST(longitude AS DOUBLE), 'NaN'::DOUBLE) AS longitude,
+        |    NULLIF(TRY_CAST("Temperature" AS DOUBLE), 'NaN'::DOUBLE) AS temperature,
+        |    NULLIF(TRY_CAST("Salinity" AS DOUBLE), 'NaN'::DOUBLE) AS salinity
         |  FROM read_csv('$RawFixtureCsv', header=true, all_varchar=true)
         |  WHERE time IS NULL OR time NOT IN ('UTC', 'units'))
         |SELECT * FROM typed
@@ -2722,11 +2723,11 @@ object SparkEntry {
     "q29_quality_report" ->
       s"""WITH typed AS (
         |  SELECT TRY_CAST(time AS TIMESTAMP) AS time,
-        |    TRY_CAST(depth AS DOUBLE) AS depth,
-        |    TRY_CAST("Latitude" AS DOUBLE) AS latitude,
-        |    TRY_CAST(longitude AS DOUBLE) AS longitude,
-        |    TRY_CAST("Temperature" AS DOUBLE) AS temperature,
-        |    TRY_CAST("Salinity" AS DOUBLE) AS salinity
+        |    NULLIF(TRY_CAST(depth AS DOUBLE), 'NaN'::DOUBLE) AS depth,
+        |    NULLIF(TRY_CAST("Latitude" AS DOUBLE), 'NaN'::DOUBLE) AS latitude,
+        |    NULLIF(TRY_CAST(longitude AS DOUBLE), 'NaN'::DOUBLE) AS longitude,
+        |    NULLIF(TRY_CAST("Temperature" AS DOUBLE), 'NaN'::DOUBLE) AS temperature,
+        |    NULLIF(TRY_CAST("Salinity" AS DOUBLE), 'NaN'::DOUBLE) AS salinity
         |  FROM read_csv('$RawFixtureCsv', header=true, all_varchar=true)
         |  WHERE time IS NULL OR time NOT IN ('UTC', 'units')),
         |cleaned AS (

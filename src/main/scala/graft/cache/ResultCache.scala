@@ -5,8 +5,13 @@ import java.sql.Timestamp
 import java.time.Instant
 import java.util.Locale
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.LocalFrames
 
 /** Query-result cache with the reference's semantics
   * (`cache_manager.py:33-337`), re-expressed as a keyed Parquet store:
@@ -39,7 +44,7 @@ final class ResultCache(
     ttlHours: Int = ResultCache.TtlHours,
     maxEntryBytes: Long = ResultCache.MaxEntryBytes,
     clock: () => Instant = () => Instant.now()) {
-  import ResultCache.queryHash
+  import ResultCache.{MetaSchema, queryHash}
 
   private val metaRoot = Paths.get(dir, "meta")
   private val dataRoot = Paths.get(dir, "data")
@@ -82,8 +87,11 @@ final class ResultCache(
           variables: Seq[String], data: DataFrame): Boolean = {
     val h = queryHash(lat, lon, startDate, endDate, variables)
     maybeCleanup(clock())
+    // a driver-local frame (OceanEngine's fetch) is sized and written in
+    // one task each: no exchange under the size aggregate, one file
+    val stored = LocalFrames.oneTask(data)
     val (rowCount, jsonBytes) = {
-      val r = data.toJSON.agg(
+      val r = stored.toJSON.agg(
         count(lit(1)).as("n"),
         coalesce(sum(length(col("value"))), lit(0L)).as("bytes")).collect().head
       (r.getLong(0), r.getLong(1))
@@ -94,41 +102,42 @@ final class ResultCache(
 
     val now = clock()
     val expires = now.plusSeconds(ttlHours.toLong * 3600)
-    data.write.mode(SaveMode.Overwrite).parquet(dataDir(h).toString)
-    import spark.implicits._
-    Seq((h, lat, lon, startDate, endDate,
-         ResultCache.variablesJson(variables), rowCount,
-         Timestamp.from(now), Timestamp.from(expires), sizeBytes))
-      .toDF("query_hash", "latitude", "longitude", "start_date", "end_date",
-            "variables", "row_count", "fetched_at", "expires_at", "file_size_bytes")
+    stored.write.mode(SaveMode.Overwrite).parquet(dataDir(h).toString)
+    val meta = Row(h, lat, lon, startDate, endDate, ResultCache.variablesJson(variables),
+                   rowCount, Timestamp.from(now), Timestamp.from(expires), sizeBytes)
+    spark.createDataFrame(Seq(meta).asJava, MetaSchema)
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(metaDir(h).toString)
     true
   }
 
   /** S9/P6: probe by exact key; Some(frame) only when present and
-    * unexpired (`cache_manager.py:76-121`). */
+    * unexpired (`cache_manager.py:76-121`). The freshness probe is one
+    * Spark job: the metadata is read under [[ResultCache.MetaSchema]],
+    * so no schema-inference job runs first. The returned frame is a
+    * lazy parquet read of the entry, at most [[ResultCache.MaxEntryBytes]]
+    * (as sized by [[put]]); [[graft.OceanEngine.fetchObservations]]
+    * collects it once to the driver and serves the click from there. */
   def get(lat: Double, lon: Double, startDate: String, endDate: String,
           variables: Seq[String]): Option[DataFrame] = {
     val h = queryHash(lat, lon, startDate, endDate, variables)
-    if (!Files.exists(metaDir(h))) return None
-    val fresh = spark.read.parquet(metaDir(h).toString)
+    if (!Files.exists(metaDir(h)) || !Files.exists(dataDir(h))) return None
+    val fresh = !readMeta(Seq(metaDir(h)))
       .filter(col("expires_at") > Timestamp.from(clock()))
-      .limit(1).count() == 1
-    if (fresh && Files.exists(dataDir(h))) Some(spark.read.parquet(dataDir(h).toString))
-    else None
+      .isEmpty
+    if (fresh) Some(spark.read.parquet(dataDir(h).toString)) else None
   }
 
-  /** The full metadata table (one row per cached query); empty-schema
-    * safe when the cache has no entries yet. */
+  private def readMeta(dirs: Seq[Path]): DataFrame =
+    spark.read.schema(MetaSchema).parquet(dirs.map(_.toString): _*)
+
+  /** The full metadata table (one row per cached query, under
+    * [[ResultCache.MetaSchema]]); empty-schema safe when the cache has
+    * no entries yet. */
   def metadata: DataFrame = {
     val dirs = listKeys(metaRoot)
-    if (dirs.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(String, Double, Double, String, String, String, Long, Timestamp, Timestamp, Long)]
-        .toDF("query_hash", "latitude", "longitude", "start_date", "end_date",
-              "variables", "row_count", "fetched_at", "expires_at", "file_size_bytes")
-    } else spark.read.parquet(dirs.map(_.toString): _*)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), MetaSchema)
+    else readMeta(dirs)
   }
 
   /** O3: the cache listing (`cache_manager.py:248-280`) — unexpired
@@ -207,8 +216,6 @@ final class ResultCache(
   /** Clear everything (`cache_manager.py:283-293`). */
   def clearAll(): Unit = { deleteRecursive(metaRoot); deleteRecursive(dataRoot) }
 
-  import scala.jdk.CollectionConverters._
-
   private def listKeys(root: Path): Seq[Path] =
     if (!Files.isDirectory(root)) Seq.empty
     else {
@@ -229,6 +236,20 @@ object ResultCache {
   val TtlHours = 24            // config.py:61
   val MaxEntryBytes: Long = 100L * 1024 * 1024 // config.py:62 (100 MB)
   val CleanupIntervalHours = 6 // config.py:63 (declared cadence)
+
+  /** The one-row-per-entry metadata layout [[ResultCache.put]] writes;
+    * reads name it instead of inferring it from the files. */
+  val MetaSchema: StructType = StructType(Seq(
+    StructField("query_hash", StringType),
+    StructField("latitude", DoubleType),
+    StructField("longitude", DoubleType),
+    StructField("start_date", StringType),
+    StructField("end_date", StringType),
+    StructField("variables", StringType),
+    StructField("row_count", LongType),
+    StructField("fetched_at", TimestampType),
+    StructField("expires_at", TimestampType),
+    StructField("file_size_bytes", LongType)))
 
   /** F10: the query key, byte-for-byte with the reference
     * (`cache_manager.py:63-74`): Python's `f"{x:.6f}"` ==

@@ -53,7 +53,10 @@ object Clean {
     * Spark 4 runs ANSI mode by default where plain cast/to_timestamp
     * THROW on malformed input, so the `try_` forms are required for
     * coerce semantics. Session TZ is UTC (GraftSession) so `Z`-suffixed
-    * and `+00:00` ISO forms resolve identically. */
+    * and `+00:00` ISO forms resolve identically. A `NaN` cell is a
+    * missing value in pandas, but `try_cast('NaN' AS DOUBLE)` is
+    * `Double.NaN`, not null, so NaN maps to null here: the dropna stages
+    * and the quality report then see it as missing. */
   private def coerceTypes(df: DataFrame): DataFrame = {
     val withTime =
       if (df.columns.contains("time") && df.schema("time").dataType == StringType)
@@ -61,7 +64,7 @@ object Clean {
       else df
     NumericCols.foldLeft(withTime) { (d, c) =>
       if (d.columns.contains(c) && d.schema(c).dataType == StringType)
-        d.withColumn(c, expr(s"try_cast(`$c` AS DOUBLE)"))
+        d.withColumn(c, expr(s"nanvl(try_cast(`$c` AS DOUBLE), CAST(NULL AS DOUBLE))"))
       else d
     }
   }

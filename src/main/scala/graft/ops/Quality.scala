@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalFrames
+
 /** A8/P9: the reference's data-quality report (`extract.py:229-295`,
   * thresholds `config.py:66-71`) as ONE aggregation pass.
   *
@@ -48,11 +50,13 @@ object Quality {
     df.agg(count(lit(1)).as("n"), (perCol ++ perVar): _*)
   }
 
-  /** Run the report. Exactly one Spark job; all flag/score logic is
-    * scalar math over the aggregate row (`extract.py:240-295`). */
+  /** Run the report: one aggregate action (one task, no exchange, over
+    * a driver-resident frame — [[LocalFrames.oneTask]]); all
+    * flag/score logic is scalar math over the aggregate row
+    * (`extract.py:240-295`). */
   def report(df: DataFrame): QualityReport = {
     val cols = df.columns.toSeq
-    val row: Row = aggPlan(df).collect().head
+    val row: Row = aggPlan(LocalFrames.oneTask(df)).collect().head
     val n = row.getAs[Long]("n")
     if (n == 0L) return Empty
 

@@ -148,11 +148,14 @@ final class ErddapSource(
   /** Parse a fetched CSV body into a raw all-string DataFrame (S3:
     * `pd.read_csv(StringIO(text))`, `extract.py:160-162`). The units
     * row survives into the frame exactly as in pandas; cleaning is a
-    * separate stage. Driver-side by design: bodies are ≤72 rows. */
+    * separate stage. Driver-side by design: bodies are ≤72 rows, so the
+    * frame is one partition and the clean's time sort over it runs as
+    * one task, with no range-partitioning sample or exchange. */
   def toRawDataFrame(spark: SparkSession, csvBody: String): DataFrame = {
     import spark.implicits._
     val ds = csvBody.linesIterator.toSeq.toDS()
     spark.read.option("header", "true").option("ignoreLeadingWhiteSpace", "true").csv(ds)
+      .coalesce(1)
   }
 }
 

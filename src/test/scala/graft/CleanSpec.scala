@@ -13,8 +13,8 @@ import graft.ops.Clean
   * the dirty fixture. */
 class CleanSpec extends AnyFunSuite with SparkTestSession {
 
-  private val refRaw = "/root/reference/data/sea_surface_sample.csv"
-  private val fixture = "/root/repo/data/fixtures/sea_surface_raw.csv"
+  private val refRaw = Fixtures.path("sea_surface_sample.csv")
+  private val fixture = Fixtures.path("sea_surface_raw.csv")
 
   private def readCsv(path: String) =
     spark.read.option("header", "true").csv(path)
@@ -95,5 +95,23 @@ class CleanSpec extends AnyFunSuite with SparkTestSession {
     val api = Clean.cleanApiResponse(readCsv(fixture))
     assert(Clean.numericProjection(api).columns.toSeq ==
       Seq("depth", "latitude", "longitude", "temperature", "salinity"))
+  }
+
+  test("NaN cells are missing values (pandas): an all-NaN row is dropped, a NaN cell is null") {
+    import spark.implicits._
+    val raw = Seq(
+      ("time", "depth", "latitude", "longitude", "Temperature", "Salinity"),
+      ("UTC", "m", "degrees_north", "degrees_east", "degree_C", "PSU"),
+      ("1960-01-16T00:00:00Z", "0.0", "32.5", "-70.0", "NaN", "36.4"),
+      ("1960-02-16T00:00:00Z", "0.0", "32.5", "-70.0", "NaN", "NaN"),
+      ("1960-03-16T00:00:00Z", "NaN", "32.5", "-70.0", "21.5", "36.5"))
+      .map(_.productIterator.mkString(",")).toDS()
+    val df = spark.read.option("header", "true").csv(raw)
+    val api = Clean.cleanApiResponse(df).collect()
+    assert(api.length == 2)
+    assert(api(0).isNullAt(4) && api(0).getDouble(5) == 36.4)
+    assert(api(1).isNullAt(1) && api(1).getDouble(4) == 21.5)
+    // how='any' drops the partial row too
+    assert(Clean.cleanTransform(df).count() == 1)
   }
 }

@@ -52,4 +52,44 @@ class DescribeSpec extends AnyFunSuite with SparkTestSession {
     val strings = Seq("only", "strings").toDF("s")
     assertThrows[IllegalArgumentException](Describe.describe(strings))
   }
+
+  /** Stat rows of the rounded display form, so NaN also goes through round3. */
+  private def statsOf(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] =
+    Describe.describe(df, round3 = true).collect()
+      .map(r => r.getString(0) -> (1 until r.length).map(r.getDouble)).toMap
+
+  test("one row: std is NaN (ddof=1 over one value), the rest is the value") {
+    import spark.implicits._
+    val got = statsOf(Seq(2.5).toDF("x"))
+    assert(got("count") == Seq(1.0))
+    assert(got("std").head.isNaN)
+    Seq("mean", "min", "25%", "50%", "75%", "max").foreach(s => assert(got(s) == Seq(2.5), s))
+  }
+
+  test("all-null column: count 0, every other stat NaN; its neighbour unaffected") {
+    import spark.implicits._
+    val df = Seq((Option.empty[Double], 1.0), (None, 3.0)).toDF("gone", "x")
+    val got = statsOf(df)
+    assert(got("count") == Seq(0.0, 2.0))
+    Describe.Stats.filterNot(_ == "count").foreach(s => assert(got(s).head.isNaN, s))
+    assert(got("mean")(1) == 2.0 && got("50%")(1) == 2.0 && got("std")(1) == 1.414)
+  }
+
+  test("empty frame: count 0, every other stat NaN, no exception") {
+    import spark.implicits._
+    val got = statsOf(Seq.empty[(Double, Long)].toDF("x", "n"))
+    assert(got.keySet == Describe.Stats.toSet)
+    assert(got("count") == Seq(0.0, 0.0))
+    Describe.Stats.filterNot(_ == "count").foreach(s => assert(got(s).forall(_.isNaN), s))
+  }
+
+  test("a NaN cell is skipped like a missing value, as pandas does") {
+    import spark.implicits._
+    val got = statsOf(Seq(1.0, Double.NaN, 3.0).toDF("x"))
+    assert(got("count") == Seq(2.0))
+    assert(got("mean") == Seq(2.0))
+    assert(got("std") == Seq(1.414))
+    assert(got("min") == Seq(1.0) && got("max") == Seq(3.0))
+    assert(got("25%") == Seq(1.5) && got("50%") == Seq(2.0) && got("75%") == Seq(2.5))
+  }
 }

@@ -11,13 +11,13 @@ import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
   * (SURVEY §3.2): fetch → clean+score, summary shape, cache behavior. */
 class OceanEngineSpec extends AnyFunSuite with SparkTestSession {
 
-  private val body =
-    new String(Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/sea_surface_sample.csv")), "UTF-8")
+  private val body = Fixtures.read("sea_surface_sample.csv")
 
-  private def engine(withCache: Boolean = false): (OceanEngine, FixtureBackend) = {
-    val urls = Map(
-      ErddapUrl.build(32.5, -70.0, "1960-01-01", "1960-02-01") -> body)
+  private def engine(
+      withCache: Boolean = false,
+      urls: Map[String, String] =
+        Map(ErddapUrl.build(32.5, -70.0, "1960-01-01", "1960-02-01") -> body))
+      : (OceanEngine, FixtureBackend) = {
     val backend = new FixtureBackend(urls)
     val cache =
       if (withCache) Some(new ResultCache(spark, Files.createTempDirectory("graft-eng").toString))
@@ -92,6 +92,76 @@ class OceanEngineSpec extends AnyFunSuite with SparkTestSession {
     assert(byStat("count").getAs[Double]("temperature") == 1.0)
     assert(byStat("mean").getAs[Double]("temperature") == 21.370) // round3
     assert(byStat("50%").getAs[Double]("salinity") == 36.396)
+  }
+
+  /** Two years of monthly rows, out of time order, with a NaN cell in
+    * each variable and one all-NaN row (a land-like month). */
+  private val twoYears = ("1959-01-01", "1960-12-01")
+  private val twoYearBody: String = {
+    val rows = (0 until 24).map { m =>
+      val temp = if (m == 5 || m == 13) "NaN" else f"${20.0 + m * 0.125}%.3f"
+      val sal = if (m == 9 || m == 13) "NaN" else f"${36.0 + m * 0.0625}%.4f"
+      f"${1959 + m / 12}-${m % 12 + 1}%02d-16T00:00:00Z,0.0,32.5,-70.0,$temp,$sal"
+    }
+    val scrambled = rows.indices.map(i => rows((i * 7) % rows.length))
+    (Seq("time,depth,latitude,longitude,Temperature,Salinity",
+         "UTC,m,degrees_north,degrees_east,degree_C,PSU") ++ scrambled).mkString("", "\n", "\n")
+  }
+
+  private def twoYearUrls(lons: Double*): Map[String, String] =
+    lons.map(lon => ErddapUrl.build(32.5, lon, twoYears._1, twoYears._2) -> twoYearBody).toMap
+
+  /** Spark jobs started by `body`, counted by a listener once the bus
+    * has delivered every event. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graftbridge.ListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("a dashboard click runs at most 5 Spark jobs on a cache hit and 8 on a miss") {
+    // the click: fetch, show the rows, show the summary table
+    def click(e: OceanEngine, lon: Double): Boolean = {
+      val r = e.fetchObservations(32.5, lon, twoYears._1, twoYears._2)
+      r.data.collect()
+      e.summary(r.data).collect()
+      r.fromCache
+    }
+    val (e, backend) = engine(withCache = true, twoYearUrls(-70.0, -70.5))
+    // warm the session on another point: a miss, then a hit
+    assert(!click(e, -70.5) && click(e, -70.5))
+    var hit = true
+    val missJobs = jobsOf { hit = click(e, -70.0) }
+    assert(!hit && backend.attempts == 2)
+    val hitJobs = jobsOf { hit = click(e, -70.0) }
+    assert(hit && backend.attempts == 2)
+    info(s"miss $missJobs jobs, hit $hitJobs jobs")
+    assert(missJobs <= 8, s"cache miss ran $missJobs jobs")
+    assert(hitJobs <= 5, s"cache hit ran $hitJobs jobs")
+  }
+
+  test("a cache hit hands back the miss's frame: schema, rows, time order") {
+    val (e, _) = engine(withCache = true, twoYearUrls(-70.0))
+    val miss = e.fetchObservations(32.5, -70.0, twoYears._1, twoYears._2)
+    val hit = e.fetchObservations(32.5, -70.0, twoYears._1, twoYears._2)
+    assert(!miss.fromCache && hit.fromCache)
+    assert(hit.data.schema == miss.data.schema)
+    val rows = miss.data.collect().toSeq
+    assert(hit.data.collect().toSeq == rows)
+    // the all-NaN month is dropped, the NaN cells read as missing
+    assert(rows.length == 23)
+    val times = rows.map(_.getAs[java.sql.Timestamp]("time").getTime)
+    assert(times == times.sorted)
+    assert(rows.count(_.isNullAt(miss.data.schema.fieldIndex("temperature"))) == 1)
+    assert(hit.quality == miss.quality)
+    assert(e.summary(hit.data).collect().toSeq == e.summary(miss.data).collect().toSeq)
   }
 
   test("queryMetadata: snapping, validity, expected points, URL") {

@@ -13,9 +13,7 @@ import graft.sources.{ErddapSource, ErddapUrl, FixtureBackend}
   * the reference's own committed double-header sample. */
 class PipelineSpec extends AnyFunSuite with SparkTestSession {
 
-  private def fixtureBody: String =
-    new String(Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/sea_surface_sample.csv")), "UTF-8")
+  private def fixtureBody: String = Fixtures.read("sea_surface_sample.csv")
 
   private def makeOrchestrator(): PipelineOrchestrator = {
     // The reference's fixed extract point (extract.py:344-347)

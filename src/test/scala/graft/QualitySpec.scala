@@ -11,7 +11,7 @@ class QualitySpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val cleaned = Clean.cleanApiResponse(
     spark.read.option("header", "true")
-      .csv("/root/repo/data/fixtures/sea_surface_raw.csv"))
+      .csv(Fixtures.path("sea_surface_raw.csv")))
 
   test("report over the cleaned fixture: hand-computed score") {
     val r = Quality.report(cleaned)
